@@ -10,6 +10,12 @@ composable DataFrame transforms):
     )
 """
 
+# First, so that every Python worker that unpickles a kernel of this package
+# stops re-reading pyspark.zip on each later task (see _importcache).
+from pdf_parse_bench_spark import _importcache
+
+_importcache.install()
+
 from pdf_parse_bench_spark.operators.extract import (  # noqa: F401
     align_extractions,
     assemble_markdown,

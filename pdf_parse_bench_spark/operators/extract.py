@@ -77,12 +77,14 @@ def extract_spans(md_df: DataFrame, boilerplate: frozenset[str] | None = None,
                   rebalance: bool = True, engine: str = "pandas") -> DataFrame:
     """Unguided extraction: markdown → ordered spans (flagship path).
 
-    engine='pandas' (default) is the mapInPandas form; engine='arrow' runs
-    the identical kernel via mapInArrow (no pandas Block-manager
-    round-trip). Measured on this box the pandas exchange is ~8% faster at
-    both 8 and 32 cores (string-heavy output: Arrow→pandas object arrays
-    beat RecordBatch.from_pydict building), so it stays the default; the
-    sweep knob lives in bench.py (SPARK_GRAFT_ENGINE)."""
+    engine='pandas' (default here) is the mapInPandas form; engine='arrow'
+    runs the identical kernel via mapInArrow (no pandas Block-manager
+    round-trip). bench.py passes its SPARK_GRAFT_ENGINE sweep knob, which
+    defaults to 'arrow', so the bench and its scaling sub-runs run the
+    arrow form. The pandas exchange once measured ~8% faster at 8 and 32
+    cores, but that was while every Python task also paid ~0.25 core-s
+    re-reading pyspark.zip (see _importcache); the two have not been
+    compared since."""
     if boilerplate is None:
         boilerplate = _collect_boilerplate(md_df)
     spark = md_df.sparkSession
