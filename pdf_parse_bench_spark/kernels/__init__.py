@@ -1,7 +1,8 @@
 """Pure pandas/NumPy kernels — no SparkSession required.
 
-These are the vectorized cores later wrapped in mapInPandas/applyInPandas
-(SURVEY.md §7 step 2). Keeping them Spark-free makes them unit-testable and
+These are the vectorized cores the operators wrap: the per-document ones
+through operators/rows.map_rows (one mapInArrow), the corpus-level ones in
+pandas/Arrow UDFs (SURVEY.md §7 step 2). Keeping them Spark-free makes them unit-testable and
 keeps all heavy per-document logic inside Arrow batches on executors.
 """
 

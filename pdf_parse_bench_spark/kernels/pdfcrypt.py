@@ -19,7 +19,8 @@ block = D(C_i) XOR C_{i-1}), so the hot decrypt path is vectorised with
 NumPy over every block of a stream at once — no per-byte Python loop.
 RC4 is inherently sequential (kept as a tight bytearray loop); it only
 runs on the RC4-encrypted minority of documents.  Everything here runs
-inside mapInPandas workers — per-document, driver never sees bytes.
+inside Arrow-batch Python workers (operators/rows.map_rows) — per-document,
+driver never sees bytes.
 
 The `encrypt_pdf` rewriter at the bottom is the generator-side analog
 (used by fixtures/tests): it re-writes any parseable PDF as a

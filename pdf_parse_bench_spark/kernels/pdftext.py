@@ -21,8 +21,9 @@ re-implements that capability from scratch:
 
 Within a page, runs are ordered by the same XY-cut used by the layout path
 so multi-column pages come out column-major; pages concatenate in page-tree
-order. Designed to run inside ``mapInPandas`` over Arrow batches of PDF
-bytes — no driver-side loops (north_rule: batched byte-stream tokenization).
+order. Designed to run per document inside Arrow batches of PDF bytes
+(operators/rows.map_rows) — no driver-side loops (north_rule: batched
+byte-stream tokenization).
 """
 
 from __future__ import annotations

@@ -1,17 +1,20 @@
 """DataFrame-native extraction pipeline (the engine's core path).
 
 Stages (all vectorized — kernels run inside Arrow batches on executors,
-never per-row at the driver; north_rule):
+never per-row at the driver; north_rule). Every per-document kernel
+crosses the Python boundary once, through operators/rows.map_rows:
 
   markdown corpus ──► compute_boilerplate (corpus-level repeated first/last
                       line aggregation — the distributed analog of the
                       reference's per-page y-cluster header/footer strip, P2)
-                 ──► extract_spans (mapInPandas over size-rebalanced rows)
+                 ──► extract_spans (map_rows over size-rebalanced rows)
   layout blocks  ──► extract_spans_from_layout (collect_list per doc_id
-                      → batched mapInPandas: XY-cut order + category strip)
-  pdf bytes      ──► parse_pdfs (mapInPandas byte-stream tokenizer, M2)
+                      → batched map_rows: XY-cut order + category strip)
+  html / tei     ──► extract_spans_from_html / _tei (DOM / ElementTree walk)
+  pdf bytes      ──► parse_pdfs, pdf_spans (byte-stream tokenizer, M2),
+                      pdf_encrypt_audit, rasterize_pages, pdf_image_stats_op
   golden+markdown──► align_extractions (packed-golden join → batched
-                      mapInPandas, the GT-guided "extract" stage J1/J2/J5/J6)
+                      map_rows, the GT-guided "extract" stage J1/J2/J5/J6)
 
 Reference lifecycle being replaced: pipeline/pipeline.py:62-139 (per-doc
 thread pools → Spark task parallelism, SURVEY.md §3).
@@ -19,9 +22,6 @@ thread pools → Spark task parallelism, SURVEY.md §3).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from pdf_parse_bench_spark import schemas
@@ -30,9 +30,20 @@ from pdf_parse_bench_spark.kernels.layout import blocks_to_spans
 from pdf_parse_bench_spark.kernels.htmldoc import parse_html
 from pdf_parse_bench_spark.kernels.markdown import parse_markdown
 from pdf_parse_bench_spark.kernels.pdftext import extract_pdf_text
+from pdf_parse_bench_spark.operators.rows import map_rows
 from pdf_parse_bench_spark.operators.skew import rebalance_by_size
 
-_SPAN_COLS = ["doc_id", "offset", "kind", "text", "media_ref"]
+
+def _span_rows(doc_id: str, spans: list[dict]) -> list[tuple]:
+    """A span kernel's output as EXTRACTED_SPANS_SCHEMA-ordered rows."""
+    return [(doc_id, s["offset"], s["kind"], s["text"], s["media_ref"])
+            for s in spans]
+
+
+def _span_kernel(kernel):
+    """map_rows row factory for a (doc_id, payload) input whose span
+    kernel takes the payload alone."""
+    return lambda: lambda doc_id, payload: _span_rows(doc_id, kernel(payload))
 
 
 def compute_boilerplate(md_df: DataFrame, min_docs: int = 5) -> DataFrame:
@@ -74,74 +85,34 @@ def _collect_boilerplate(md_df: DataFrame, min_docs: int = 5) -> frozenset[str]:
 
 
 def extract_spans(md_df: DataFrame, boilerplate: frozenset[str] | None = None,
-                  rebalance: bool = True, engine: str = "pandas") -> DataFrame:
+                  rebalance: bool = True, engine: str = "arrow") -> DataFrame:
     """Unguided extraction: markdown → ordered spans (flagship path).
 
-    engine='pandas' (default here) is the mapInPandas form; engine='arrow'
-    runs the identical kernel via mapInArrow (no pandas Block-manager
-    round-trip). bench.py passes its SPARK_GRAFT_ENGINE sweep knob, which
-    defaults to 'arrow', so the bench and its scaling sub-runs run the
-    arrow form. The pandas exchange once measured ~8% faster at 8 and 32
-    cores, but that was while every Python task also paid ~0.25 core-s
-    re-reading pyspark.zip (see _importcache); the two have not been
-    compared since."""
+    One map_rows pass runs parse_markdown per document. `engine` is
+    inert: it is accepted because bench.py passes its SPARK_GRAFT_ENGINE
+    knob, and every value runs the one Arrow path. rebalance=False skips
+    the size rebalance for inputs that are already spread (streaming
+    micro-batches, pipelines that hash-spread the assembled markdown)."""
     if boilerplate is None:
         boilerplate = _collect_boilerplate(md_df)
-    spark = md_df.sparkSession
-    bp = spark.sparkContext.broadcast(boilerplate)
+    bp = md_df.sparkSession.sparkContext.broadcast(boilerplate)
     if rebalance:
         md_df = rebalance_by_size(md_df, size_col=F.length("markdown"))
 
-    if engine == "arrow":
-        import pyarrow as pa
-
-        arrow_schema = pa.schema([
-            ("doc_id", pa.string()), ("offset", pa.int32()),
-            ("kind", pa.string()), ("text", pa.string()),
-            ("media_ref", pa.string()),
-        ])
-
-        def run_arrow(batches):
-            bset = bp.value
-            for rb in batches:
-                doc_ids = rb.column(0).to_pylist()
-                mds = rb.column(1).to_pylist()
-                out = {c: [] for c in _SPAN_COLS}
-                for doc_id, md in zip(doc_ids, mds):
-                    for s in parse_markdown(md, bset):
-                        out["doc_id"].append(doc_id)
-                        out["offset"].append(s["offset"])
-                        out["kind"].append(s["kind"])
-                        out["text"].append(s["text"])
-                        out["media_ref"].append(s["media_ref"])
-                yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
-
-        return md_df.select("doc_id", "markdown").mapInArrow(
-            run_arrow, schema=schemas.EXTRACTED_SPANS_SCHEMA)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         bset = bp.value
-        for pdf in batches:
-            out = {c: [] for c in _SPAN_COLS}
-            for doc_id, md in zip(pdf["doc_id"], pdf["markdown"]):
-                for s in parse_markdown(md, bset):
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(s["offset"])
-                    out["kind"].append(s["kind"])
-                    out["text"].append(s["text"])
-                    out["media_ref"].append(s["media_ref"])
-            yield pd.DataFrame(out)
+        return lambda doc_id, md: _span_rows(doc_id, parse_markdown(md, bset))
 
-    return md_df.mapInPandas(run, schema=schemas.EXTRACTED_SPANS_SCHEMA)
+    return map_rows(md_df.select("doc_id", "markdown"),
+                    schemas.EXTRACTED_SPANS_SCHEMA, make_row)
 
 
-def extract_spans_from_layout(blocks_df: DataFrame,
-                              keep_media: bool = True) -> DataFrame:
+def extract_spans_from_layout(blocks_df: DataFrame) -> DataFrame:
     """Layout path: one shuffle co-locates each doc's blocks (XY-cut
     restores reading order from geometry alone).
 
     Physical shape: JVM-side collect_list aggregation feeding ONE
-    mapInPandas pass with thousands of docs per Arrow batch — NOT
+    map_rows pass with thousands of docs per Arrow batch — NOT
     applyInPandas, whose one-pandas-DataFrame-per-group path pays
     per-group overhead that dominates when docs are small (measured at
     sf0.1: 5.9 s grouped vs sub-second batched for a 0.3 s/32-core
@@ -155,90 +126,39 @@ def extract_spans_from_layout(blocks_df: DataFrame,
     grouped = spread_for_kernel(blocks_df).groupBy("doc_id").agg(
         F.array_sort(F.collect_list(
             F.struct("page_no", "bbox", "category", "text"))).alias("blocks"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in _SPAN_COLS}
-            for doc_id, blocks in zip(pdf["doc_id"], pdf["blocks"]):
-                spans = blocks_to_spans(
-                    [dict(b) for b in blocks], keep_media=keep_media)
-                for s in spans:
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(s["offset"])
-                    out["kind"].append(s["kind"])
-                    out["text"].append(s["text"])
-                    out["media_ref"].append(s["media_ref"])
-            yield pd.DataFrame(out)
-
-    return grouped.mapInPandas(run, schema=schemas.EXTRACTED_SPANS_SCHEMA)
+    return map_rows(grouped, schemas.EXTRACTED_SPANS_SCHEMA,
+                    _span_kernel(blocks_to_spans))
 
 
-def extract_spans_from_html(html_df: DataFrame,
-                            rebalance: bool = True) -> DataFrame:
+def extract_spans_from_html(html_df: DataFrame) -> DataFrame:
     """Structured-markup path (M4 analog; north_rule's HTML boilerplate
     strip + DOM heuristics): header/footer/nav/script subtrees dropped by
     DOM role, body walked in document order, spans emitted."""
-    if rebalance:
-        html_df = rebalance_by_size(html_df, size_col=F.length("html"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in _SPAN_COLS}
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                for s in parse_html(html):
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(s["offset"])
-                    out["kind"].append(s["kind"])
-                    out["text"].append(s["text"])
-                    out["media_ref"].append(s["media_ref"])
-            yield pd.DataFrame(out)
-
-    return html_df.mapInPandas(run, schema=schemas.EXTRACTED_SPANS_SCHEMA)
+    html_df = rebalance_by_size(html_df, size_col=F.length("html"))
+    return map_rows(html_df.select("doc_id", "html"),
+                    schemas.EXTRACTED_SPANS_SCHEMA, _span_kernel(parse_html))
 
 
-def extract_spans_from_tei(tei_df: DataFrame,
-                           rebalance: bool = True) -> DataFrame:
+def extract_spans_from_tei(tei_df: DataFrame) -> DataFrame:
     """TEI-XML path (GROBID flavor of M4, parsers/grobid/__main__.py:22-47):
     abstract first, then the body div walk — namespace-agnostic ElementTree
     kernel inside Arrow batches."""
     from pdf_parse_bench_spark.kernels.teidoc import parse_tei
 
-    if rebalance:
-        tei_df = rebalance_by_size(tei_df, size_col=F.length("tei"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in _SPAN_COLS}
-            for doc_id, tei in zip(pdf["doc_id"], pdf["tei"]):
-                for s in parse_tei(tei):
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(s["offset"])
-                    out["kind"].append(s["kind"])
-                    out["text"].append(s["text"])
-                    out["media_ref"].append(s["media_ref"])
-            yield pd.DataFrame(out)
-
-    return tei_df.mapInPandas(run, schema=schemas.EXTRACTED_SPANS_SCHEMA)
+    tei_df = rebalance_by_size(tei_df, size_col=F.length("tei"))
+    return map_rows(tei_df.select("doc_id", "tei"),
+                    schemas.EXTRACTED_SPANS_SCHEMA, _span_kernel(parse_tei))
 
 
-def parse_pdfs(pdf_df: DataFrame, rebalance: bool = True) -> DataFrame:
+def parse_pdfs(pdf_df: DataFrame) -> DataFrame:
     """Raw-PDF path (M2): byte-stream tokenizer inside Arrow batches."""
-    if rebalance:
-        pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "text": [extract_pdf_text(bytes(b)) for b in pdf["pdf_bytes"]],
-                }
-            )
-
-    return pdf_df.mapInPandas(run, schema=schemas.PDF_TEXT_SCHEMA)
+    pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
+    return map_rows(pdf_df.select("doc_id", "pdf_bytes"),
+                    schemas.PDF_TEXT_SCHEMA,
+                    lambda: lambda doc_id, b: [(doc_id, extract_pdf_text(b))])
 
 
-def pdf_spans(pdf_df: DataFrame, rebalance: bool = True) -> DataFrame:
+def pdf_spans(pdf_df: DataFrame) -> DataFrame:
     """Raw-PDF path with span classification: font-aware formula/prose
     separation (math-face runs + formula-line banding,
     kernels/pdftext._runs_to_spans) → ordered (kind, text) spans per doc —
@@ -246,30 +166,15 @@ def pdf_spans(pdf_df: DataFrame, rebalance: bool = True) -> DataFrame:
     VLM (block model: parsers/dots_ocr/__main__.py:125-142)."""
     from pdf_parse_bench_spark.kernels.pdftext import extract_pdf_spans
 
-    if rebalance:
-        pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "offset": [], "kind": [], "text": [],
-                   "media_ref": []}
-            for doc_id, b in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-                for s in extract_pdf_spans(bytes(b)):
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(s["offset"])
-                    out["kind"].append(s["kind"])
-                    out["text"].append(s["text"])
-                    out["media_ref"].append(s["media_ref"])
-            yield pd.DataFrame(out)
-
-    return pdf_df.mapInPandas(
-        run, schema="doc_id string, offset int, kind string, text string, "
-                    "media_ref string")
+    pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
+    return map_rows(
+        pdf_df.select("doc_id", "pdf_bytes"),
+        "doc_id string, offset int, kind string, text string, "
+        "media_ref string", _span_kernel(extract_pdf_spans))
 
 
 def pdf_encrypt_audit(pdf_df: DataFrame,
                       passwords_df: DataFrame | None = None,
-                      rebalance: bool = True,
                       both: bool = False) -> DataFrame:
     """Per-document encryption audit over a raw-PDF corpus: scheme
     (none / rc4-40 / rc4-128 / aes-128 / aes-256 / other / damaged) and
@@ -295,56 +200,29 @@ def pdf_encrypt_audit(pdf_df: DataFrame,
     probes exactly as before."""
     from pdf_parse_bench_spark.kernels.pdfcrypt import sniff_encryption
 
-    if rebalance:
-        pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
-    has_pw = passwords_df is not None
-    if has_pw:
+    pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
+    cols = ["doc_id", "pdf_bytes"]
+    if passwords_df is not None:
         pdf_df = pdf_df.join(
             F.broadcast(passwords_df.select("doc_id", "password")),
             "doc_id", "left")
+        cols.append("password")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pws = pdf["password"] if has_pw else [None] * len(pdf)
-            sniffs = [
-                sniff_encryption(
-                    bytes(b),
-                    password=pw.encode() if isinstance(pw, str) else b"")
-                for b, pw in zip(pdf["pdf_bytes"], pws)]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "scheme": [s for s, _ in sniffs],
-                "decrypt_ok": [ok for _, ok in sniffs],
-            })
+    def row(doc_id, b, pw=None):
+        key = pw.encode() if isinstance(pw, str) else b""
+        if not both:
+            return [(doc_id, *sniff_encryption(b, password=key))]
+        scheme, ok_empty = sniff_encryption(b, password=b"")
+        _, ok_pw = sniff_encryption(b, password=key)
+        return [(doc_id, scheme, ok_empty, ok_pw)]
 
-    def run_both(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pws = pdf["password"] if has_pw else [None] * len(pdf)
-            schemes, ok_empty, ok_pw = [], [], []
-            for b, pw in zip(pdf["pdf_bytes"], pws):
-                bb = bytes(b)
-                scheme, oke = sniff_encryption(bb, password=b"")
-                _, okp = sniff_encryption(
-                    bb, password=pw.encode() if isinstance(pw, str) else b"")
-                schemes.append(scheme)
-                ok_empty.append(oke)
-                ok_pw.append(okp)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"], "scheme": schemes,
-                "decrypt_ok_empty": ok_empty, "decrypt_ok_pw": ok_pw,
-            })
-
-    if both:
-        return pdf_df.mapInPandas(
-            run_both,
-            schema="doc_id string, scheme string, "
-                   "decrypt_ok_empty boolean, decrypt_ok_pw boolean")
-    return pdf_df.mapInPandas(
-        run, schema="doc_id string, scheme string, decrypt_ok boolean")
+    schema = ("doc_id string, scheme string, "
+              "decrypt_ok_empty boolean, decrypt_ok_pw boolean" if both
+              else "doc_id string, scheme string, decrypt_ok boolean")
+    return map_rows(pdf_df.select(*cols), schema, lambda: row)
 
 
 def rasterize_pages(pdf_df: DataFrame, dpi: int = 72,
-                    rebalance: bool = True,
                     include_png: bool = True) -> DataFrame:
     """M5 page rasterization (the fitz ``get_pixmap`` analog,
     parsers/dots_ocr/__main__.py:111-118): PDF bytes → one PNG pixmap row
@@ -353,64 +231,39 @@ def rasterize_pages(pdf_df: DataFrame, dpi: int = 72,
     encoded with the stdlib PNG codec. All inside Arrow batches."""
     from pdf_parse_bench_spark.kernels.pdftext import rasterize_pdf
 
-    if rebalance:
-        pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
+    pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
 
-    cols = ["doc_id", "page_no", "png", "width", "height", "ink_ratio"]
+    def row(doc_id, b):
+        return [(doc_id, *page)
+                for page in rasterize_pdf(b, dpi, include_png=include_png)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-                for page_no, png, w, h, ink in rasterize_pdf(
-                        bytes(b), dpi, include_png=include_png):
-                    out["doc_id"].append(doc_id)
-                    out["page_no"].append(page_no)
-                    out["png"].append(png)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["ink_ratio"].append(ink)
-            yield pd.DataFrame(out)
-
-    return pdf_df.mapInPandas(
-        run,
-        schema=("doc_id string, page_no int, png binary, width int, "
-                "height int, ink_ratio double"),
-    )
+    return map_rows(
+        pdf_df.select("doc_id", "pdf_bytes"),
+        "doc_id string, page_no int, png binary, width int, height int, "
+        "ink_ratio double", lambda: row)
 
 
-def pdf_image_stats_op(pdf_df: DataFrame,
-                       rebalance: bool = True) -> DataFrame:
+def pdf_image_stats_op(pdf_df: DataFrame) -> DataFrame:
     """Embedded-figure pixel stats: PDF bytes → one row per painted
     image (doc_id, page_no, seq, media_ref, px_w, px_h, mean_intensity,
     decoded) via kernels/pdftext.pdf_image_stats — DCTDecode streams
     (baseline AND progressive JPEG) and raw/Flate rasters decode to true
     means; undecodable data degrades to decoded=false rows, never an
-    abort (X4). Same pruned-scan → size-rebalance → mapInPandas shape as
+    abort (X4). Same pruned-scan → size-rebalance → map_rows shape as
     the other PDF fan-outs."""
     from pdf_parse_bench_spark.kernels.pdftext import pdf_image_stats
 
-    if rebalance:
-        pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
+    pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
+    cols = ("page_no", "seq", "media_ref", "px_w", "px_h", "mean_intensity",
+            "decoded")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "page_no", "seq", "media_ref", "px_w", "px_h",
-                "mean_intensity", "decoded"]
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["pdf_bytes"]):
-                for row in pdf_image_stats(bytes(b)):
-                    out["doc_id"].append(doc_id)
-                    for c in cols[1:]:
-                        out[c].append(row[c])
-            yield pd.DataFrame(out)
+    def row(doc_id, b):
+        return [(doc_id, *(r[c] for c in cols)) for r in pdf_image_stats(b)]
 
-    return pdf_df.mapInPandas(
-        run,
-        schema=("doc_id string, page_no int, seq int, media_ref string, "
-                "px_w int, px_h int, mean_intensity double, "
-                "decoded boolean"),
-    )
+    return map_rows(
+        pdf_df.select("doc_id", "pdf_bytes"),
+        "doc_id string, page_no int, seq int, media_ref string, px_w int, "
+        "px_h int, mean_intensity double, decoded boolean", lambda: row)
 
 
 def align_extractions(md_df: DataFrame, golden_df: DataFrame,
@@ -423,7 +276,7 @@ def align_extractions(md_df: DataFrame, golden_df: DataFrame,
     bp = md_df.sparkSession.sparkContext.broadcast(boilerplate)
 
     # Golden side packs to ONE sorted array row per doc (map-side partial
-    # collect), then an inner join on doc_id feeds a single mapInPandas
+    # collect), then an inner join on doc_id feeds a single map_rows pass
     # with thousands of docs per Arrow batch — same one-exchange-per-side
     # shuffle shape as the previous cogroup, without applyInPandas's
     # per-group pandas overhead (docs absent from either side contribute
@@ -438,22 +291,16 @@ def align_extractions(md_df: DataFrame, golden_df: DataFrame,
             F.struct("offset", "kind", "text", "media_ref"))).alias("gt"))
     joined = md_df.select("doc_id", "markdown").join(packed, "doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in _SPAN_COLS}
-            for doc_id, markdown, gt in zip(
-                    pdf["doc_id"], pdf["markdown"], pdf["gt"]):
-                golden = [{"kind": g["kind"], "text": g["text"],
-                           "media_ref": g["media_ref"]} for g in gt]
-                for s in align_spans(golden, markdown, bp.value):
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(s["offset"])
-                    out["kind"].append(s["kind"])
-                    out["text"].append(s["text"])
-                    out["media_ref"].append(s["media_ref"])
-            yield pd.DataFrame(out)
+    def make_row():
+        bset = bp.value
 
-    return joined.mapInPandas(run, schema=schemas.EXTRACTED_SPANS_SCHEMA)
+        def row(doc_id, markdown, gt):
+            golden = [{"kind": g["kind"], "text": g["text"],
+                       "media_ref": g["media_ref"]} for g in gt]
+            return _span_rows(doc_id, align_spans(golden, markdown, bset))
+        return row
+
+    return map_rows(joined, schemas.EXTRACTED_SPANS_SCHEMA, make_row)
 
 
 def substitute_table_refs(md_df: DataFrame, tables_df: DataFrame) -> DataFrame:

@@ -19,21 +19,22 @@ storage-partitioned and shuffle-free.
 from __future__ import annotations
 
 import os
-from typing import Callable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark import TaskContext
 
-from pdf_parse_bench_spark import schemas
 from pdf_parse_bench_spark.kernels.markdown import parse_markdown
+from pdf_parse_bench_spark.operators.rows import map_rows
 
-_OUT_COLS = ["doc_id", "offset", "kind", "text", "media_ref",
-             "partition_id", "status", "error"]
 _OUT_SCHEMA = (
     "doc_id string, offset int, kind string, text string, media_ref string, "
     "partition_id int, status string, error string"
 )
+
+
+def _partition_id() -> int:
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx else -1
 
 
 def extract_with_lineage(
@@ -46,50 +47,27 @@ def extract_with_lineage(
     `fail_docs` injects deterministic failures for resume tests."""
     bp = md_df.sparkSession.sparkContext.broadcast((boilerplate, fail_docs))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         bset, fail = bp.value
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for pdf in batches:
-            out = {c: [] for c in _OUT_COLS}
-            for doc_id, md in zip(pdf["doc_id"], pdf["markdown"]):
-                try:
-                    if doc_id in fail:
-                        raise RuntimeError("injected failure")
-                    spans = parse_markdown(md, bset)
-                    for s in spans:
-                        out["doc_id"].append(doc_id)
-                        out["offset"].append(s["offset"])
-                        out["kind"].append(s["kind"])
-                        out["text"].append(s["text"])
-                        out["media_ref"].append(s["media_ref"])
-                        out["partition_id"].append(pid)
-                        out["status"].append("ok")
-                        out["error"].append(None)
-                    if not spans:
-                        # zero-span doc (empty / all-boilerplate): emit an
-                        # ok sentinel (offset=-1, excluded from span output)
-                        # so lineage checkpoints it — otherwise pending()
-                        # re-selects it forever and resume never drains.
-                        out["doc_id"].append(doc_id)
-                        out["offset"].append(-1)
-                        out["kind"].append("")
-                        out["text"].append("")
-                        out["media_ref"].append("")
-                        out["partition_id"].append(pid)
-                        out["status"].append("ok")
-                        out["error"].append(None)
-                except Exception as exc:  # X4: isolate, never abort
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(-1)
-                    out["kind"].append("")
-                    out["text"].append("")
-                    out["media_ref"].append("")
-                    out["partition_id"].append(pid)
-                    out["status"].append("error")
-                    out["error"].append(repr(exc))
-            yield pd.DataFrame(out)
+        pid = _partition_id()
 
-    return md_df.mapInPandas(run, schema=_OUT_SCHEMA)
+        def row(doc_id, md):
+            try:
+                if doc_id in fail:
+                    raise RuntimeError("injected failure")
+                rows = [(doc_id, s["offset"], s["kind"], s["text"],
+                         s["media_ref"], pid, "ok", None)
+                        for s in parse_markdown(md, bset)]
+            except Exception as exc:  # X4: isolate, never abort
+                return [(doc_id, -1, "", "", "", pid, "error", repr(exc))]
+            # zero-span doc (empty / all-boilerplate): emit an ok sentinel
+            # (offset=-1, excluded from span output) so lineage checkpoints
+            # it — otherwise pending() re-selects it forever and resume
+            # never drains.
+            return rows or [(doc_id, -1, "", "", "", pid, "ok", None)]
+        return row
+
+    return map_rows(md_df.select("doc_id", "markdown"), _OUT_SCHEMA, make_row)
 
 
 def lineage_of(result: DataFrame, stage: str = "extract") -> DataFrame:
@@ -129,31 +107,23 @@ def lineage_summary(
     bp = md_df.sparkSession.sparkContext.broadcast((boilerplate, fail_docs))
     md_df = spread_for_kernel(md_df.select("doc_id", "markdown"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_row():
         bset, fail = bp.value
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        cols = ["doc_id", "stage", "partition_id", "status", "error",
-                "n_spans"]
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for doc_id, md in zip(pdf["doc_id"], pdf["markdown"]):
-                try:
-                    if doc_id in fail:
-                        raise RuntimeError("injected failure")
-                    n, status, error = len(parse_markdown(md, bset)), "ok", None
-                except Exception as exc:  # X4: isolate, never abort
-                    n, status, error = 0, "error", repr(exc)
-                out["doc_id"].append(doc_id)
-                out["stage"].append(stage)
-                out["partition_id"].append(pid)
-                out["status"].append(status)
-                out["error"].append(error)
-                out["n_spans"].append(n)
-            yield pd.DataFrame(out)
+        pid = _partition_id()
 
-    return md_df.mapInPandas(
-        run, schema="doc_id string, stage string, partition_id int, "
-                    "status string, error string, n_spans long")
+        def row(doc_id, md):
+            try:
+                if doc_id in fail:
+                    raise RuntimeError("injected failure")
+                return [(doc_id, stage, pid, "ok", None,
+                         len(parse_markdown(md, bset)))]
+            except Exception as exc:  # X4: isolate, never abort
+                return [(doc_id, stage, pid, "error", repr(exc), 0)]
+        return row
+
+    return map_rows(
+        md_df, "doc_id string, stage string, partition_id int, "
+               "status string, error string, n_spans long", make_row)
 
 
 def pending(inputs: DataFrame, checkpoint_dir: str) -> DataFrame:

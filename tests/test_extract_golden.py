@@ -132,7 +132,7 @@ def test_binaryfile_pdf_source(spark, fx_smoke, tmp_path):
     for r in pdfs.itertuples(index=False):
         (d / f"{r.doc_id}.pdf").write_bytes(bytes(r.pdf_bytes))
     corpus = read_pdf_corpus(spark, str(d))
-    got = parse_pdfs(corpus, rebalance=False)
+    got = parse_pdfs(corpus)
     gold = _read(spark, fx_smoke, "golden_pdf_text")
     want = gold.where(gold.doc_id.isin(list(pdfs.doc_id)))
     assert got.count() == 20
@@ -177,14 +177,37 @@ def test_benchmark_facade(spark, fx_smoke):
 
 
 def test_extraction_partition_invariant(spark, fx_smoke):
-    """Span output must be EXACTLY the same set at any partitioning —
-    no kernel may depend on batch boundaries or partition order (the
-    property that makes local results transfer to a 1000-executor run)."""
-    md = spark.read.parquet(str(fx_smoke / "parsed_markdown.parquet"))
-    from pdf_parse_bench_spark.operators.extract import extract_spans
-    a = extract_spans(md.repartition(2), boilerplate=frozenset(),
-                      rebalance=False)
-    b = extract_spans(md.repartition(17), boilerplate=frozenset(),
-                      rebalance=False)
-    assert a.count() == b.count()
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+    """Output must be EXACTLY the same multiset at any partitioning and any
+    Arrow batch size (maxRecordsPerBatch 1 vs the default) — no kernel may
+    depend on batch boundaries or partition order (the property that makes
+    local results transfer to a 1000-executor run). Covers the markdown,
+    raw-PDF and lineage paths, which share operators/rows.map_rows' batch
+    loop; partition_id is the lineage's one partitioning-dependent
+    column."""
+    from collections import Counter
+
+    from pdf_parse_bench_spark.operators.extract import pdf_spans
+    from pdf_parse_bench_spark.operators.resume import extract_with_lineage
+
+    md = _read(spark, fx_smoke, "parsed_markdown")
+    pdf = _read(spark, fx_smoke, "pdf_docs")
+    ops = {
+        "extract_spans": lambda n: extract_spans(
+            md.repartition(n), boilerplate=frozenset(), rebalance=False),
+        "pdf_spans": lambda n: pdf_spans(pdf.repartition(n)),
+        "extract_with_lineage": lambda n: extract_with_lineage(
+            md.repartition(n)).drop("partition_id"),
+    }
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+    runs = {name: [] for name in ops}
+    try:
+        for batch in ("1", default):
+            spark.conf.set(key, batch)
+            for n in (2, 17):
+                for name, op in ops.items():
+                    runs[name].append(Counter(map(tuple, op(n).collect())))
+    finally:
+        spark.conf.set(key, default)
+    for name, got in runs.items():
+        assert got[0] and all(g == got[0] for g in got[1:]), name

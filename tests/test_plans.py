@@ -4,10 +4,16 @@ no cartesian products, AQE on."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 import __spark_entry__ as entry
+from pdf_parse_bench_spark import schemas
 from pdf_parse_bench_spark.operators import dedup as dd
+from pdf_parse_bench_spark.operators import extract as ex
+from pdf_parse_bench_spark.operators import media as me
+from pdf_parse_bench_spark.operators import resume as rs
 from pdf_parse_bench_spark.operators import similarity as sim
 from pdf_parse_bench_spark.operators import textstats as ts
 from pdf_parse_bench_spark.plans import (
@@ -392,18 +398,104 @@ def test_pack_sequences_deterministic_across_configs(spark):
 
 def test_pdf_image_stats_plan_shape(spark, fx_smoke):
     """pdf_image_stats reads only (doc_id, pdf_bytes), goes through ONE
-    size-rebalance exchange, and executes as a single MapInPandas — the
+    size-rebalance exchange, and executes as a single MapInArrow — the
     same pruned-scan -> rebalance -> Arrow-batch shape as the other PDF
     fan-outs (per-image decode happens inside the worker, cached per
-    object number)."""
-    from pdf_parse_bench_spark.operators.extract import pdf_image_stats_op
-
+    object number). pdf_spans and extract_spans share the shape: every
+    per-document operator crosses into Python once, through
+    operators/rows.map_rows, and no MapInPandas is left."""
     pdf = spark.read.parquet(str(fx_smoke / "pdf_docs.parquet"))
-    out = pdf_image_stats_op(pdf)
-    assert_read_schema_only(out, {"doc_id", "pdf_bytes"})
-    tree = formatted_plan(out).split("\n\n")[0]  # the plan tree section
-    assert tree.count("MapInPandas") == 1, tree
-    assert tree.count("Exchange") == 1, tree  # size rebalance, nothing else
+    md = spark.read.parquet(str(fx_smoke / "parsed_markdown.parquet"))
+    for out, cols in (
+            (ex.pdf_image_stats_op(pdf), {"doc_id", "pdf_bytes"}),
+            (ex.pdf_spans(pdf), {"doc_id", "pdf_bytes"}),
+            (ex.extract_spans(md, boilerplate=frozenset()),
+             {"doc_id", "markdown"})):
+        assert_read_schema_only(out, cols)
+        tree = formatted_plan(out).split("\n\n")[0]  # the plan tree section
+        assert tree.count("MapInArrow") == 1, tree
+        assert tree.count("MapInPandas") == 0, tree
+        assert tree.count("Exchange") == 1, tree  # size rebalance only
+
+
+_SPANS_DDL = "doc_id string, offset int, kind string, text string, " \
+             "media_ref string"
+_SPANS = schemas.EXTRACTED_SPANS_SCHEMA
+_PER_DOC_SCHEMAS = {
+    "extract_spans": (lambda t: ex.extract_spans(
+        t("parsed_markdown"), boilerplate=frozenset()), _SPANS),
+    "layout_spans": (lambda t: ex.extract_spans_from_layout(
+        t("layout_blocks")), _SPANS),
+    "html_spans": (lambda t: ex.extract_spans_from_html(
+        t("html_documents")), _SPANS),
+    "tei_spans": (lambda t: ex.extract_spans_from_tei(
+        t("tei_documents")), _SPANS),
+    "parse_pdfs": (lambda t: ex.parse_pdfs(t("pdf_docs")),
+                   schemas.PDF_TEXT_SCHEMA),
+    # nullable fields, unlike EXTRACTED_SPANS_SCHEMA
+    "pdf_spans": (lambda t: ex.pdf_spans(t("pdf_docs")), _SPANS_DDL),
+    "pdf_encrypt_audit": (
+        lambda t: ex.pdf_encrypt_audit(t("pdf_docs")),
+        "doc_id string, scheme string, decrypt_ok boolean"),
+    "pdf_encrypt_audit_both": (
+        lambda t: ex.pdf_encrypt_audit(
+            t("pdf_locked"), passwords_df=t("pdf_passwords"), both=True),
+        "doc_id string, scheme string, decrypt_ok_empty boolean, "
+        "decrypt_ok_pw boolean"),
+    "rasterize_pages": (
+        lambda t: ex.rasterize_pages(t("pdf_docs")),
+        "doc_id string, page_no int, png binary, width int, height int, "
+        "ink_ratio double"),
+    "pdf_image_stats_op": (
+        lambda t: ex.pdf_image_stats_op(t("pdf_docs")),
+        "doc_id string, page_no int, seq int, media_ref string, "
+        "px_w int, px_h int, mean_intensity double, decoded boolean"),
+    "align_extractions": (lambda t: ex.align_extractions(
+        t("parsed_markdown"), t("golden_spans"), frozenset()), _SPANS),
+    "extract_with_lineage": (
+        lambda t: rs.extract_with_lineage(t("parsed_markdown")),
+        _SPANS_DDL + ", partition_id int, status string, error string"),
+    "lineage_summary": (
+        lambda t: rs.lineage_summary(t("parsed_markdown")),
+        "doc_id string, stage string, partition_id int, status string, "
+        "error string, n_spans long"),
+    "decode_media": (
+        lambda t: me.decode_media(t("media_files")),
+        "doc_id string, offset int, media_ref string, width int, "
+        "height int, channels int, n_bytes long, mean_intensity double, "
+        "status string"),
+    "render_formula_artifacts": (
+        lambda t: me.render_formula_artifacts(t("render_requests")),
+        "doc_id string, offset int, media_ref string, width int, "
+        "height int, mean_intensity double, status string, "
+        "png_bytes binary"),
+    "thumbnail_media": (
+        lambda t: me.thumbnail_media(t("media_files")),
+        "doc_id string, offset int, media_ref string, thumb_w int, "
+        "thumb_h int, thumb_mean double, thumb_png_bytes long, "
+        "status string"),
+    "audio_features": (
+        lambda t: me.audio_features(t("audio_files")),
+        "doc_id string, media_ref string, channels int, "
+        "sample_rate int, bits int, n_samples long, duration_ms long, "
+        "mean_abs double, peak int, status string"),
+    "video_frames": (
+        lambda t: me.video_frames(t("video_files")),
+        "doc_id string, media_ref string, frame_no int, width int, "
+        "height int, n_frames int, fps_num int, fps_den int, "
+        "y_mean double, status string"),
+}
+
+
+@pytest.mark.parametrize("op, want", list(_PER_DOC_SCHEMAS.values()),
+                         ids=list(_PER_DOC_SCHEMAS))
+def test_per_doc_operator_schema(spark, fx_smoke, op, want):
+    """Every per-document operator keeps its output schema — names, types
+    and nullability — exactly, whatever runs its Python boundary."""
+    got = op(lambda name: spark.read.parquet(
+        str(fx_smoke / f"{name}.parquet"))).schema
+    assert got == (StructType.fromDDL(want) if isinstance(want, str)
+                   else want)
 
 
 def test_embedding_near_dups_kernel_no_join(spark):

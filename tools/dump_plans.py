@@ -17,8 +17,9 @@ from pdf_parse_bench_spark.session import get_spark  # noqa: E402
 SF = "/root/testdata/sf0.001"
 
 PICKS = {
-    "extract_spans": "mapInPandas extraction after size rebalancing; the scan "
-                     "reads only (doc_id, markdown).",
+    "extract_spans": "MapInArrow extraction (operators/rows.map_rows) after "
+                     "size rebalancing; the scan reads only (doc_id, "
+                     "markdown).",
     "dedup_exact": "single hash-shuffle with map-side partial aggregation "
                    "(HashAggregate appears twice: partial + final).",
     "lsh_candidate_pairs": "band self-join keyed on (band, band_key) — a "
@@ -32,7 +33,7 @@ PICKS = {
                           "double hashing); r7: whole signature computed "
                           "per doc inside one Arrow kernel — zero "
                           "shuffles.",
-    "thumbnail_media": "size-rebalanced mapInPandas decode+resize; scan "
+    "thumbnail_media": "size-rebalanced MapInArrow decode+resize; scan "
                        "reads only the media columns.",
     "revenue_by_region": "dimension tables broadcast; fact scans stay "
                          "shuffle-free until the final groupBy.",
@@ -75,7 +76,7 @@ PICKS = {
                              "Arrow kernel (r7) -> DF filter BELOW the "
                              "self-join (boilerplate shingles never reach "
                              "the pair space), ReusedExchange.",
-    "pdf_spans": "mapInPandas over size-rebalanced PDF batches; all "
+    "pdf_spans": "MapInArrow over size-rebalanced PDF batches; all "
                  "classification inside the Arrow batch, no driver loops.",
     "doc_stats_rollup": "one Expand (N+1 groupings) + one aggregation "
                         "exchange; r7: per-doc features in one Arrow "
@@ -92,14 +93,14 @@ PICKS = {
                              "literal map + a single split/lookup/join "
                              "pass — table growth adds map width, never "
                              "expression depth.",
-    "pdf_encrypt_audit": "header/KDF-only mapInPandas pass over "
+    "pdf_encrypt_audit": "header/KDF-only MapInArrow pass over "
                          "size-rebalanced PDF bytes; no page parsing.",
     "layout_spans": "collect_list packs each doc's blocks JVM-side, then "
-                    "ONE batched mapInPandas — no per-group pandas "
+                    "ONE batched MapInArrow — no per-group pandas "
                     "overhead (was applyInPandas: 5.9s -> 2.4s).",
     "align_extractions": "golden side packs to one sorted array row per "
                          "doc, joins back to the markdown row, batched "
-                         "mapInPandas — same one-exchange-per-side "
+                         "MapInArrow — same one-exchange-per-side "
                          "shuffle as the old cogroup.",
     "chunk_documents": "overlapping word windows via sequence/slice/"
                        "posexplode — zero Exchanges.",
@@ -113,7 +114,7 @@ PICKS = {
                       "spark_partition_id) + B-row offset window + "
                       "local explode.",
     "pdf_image_stats": "pruned 2-column scan -> size rebalance -> "
-                       "mapInPandas; per-image decode cached per "
+                       "MapInArrow; per-image decode cached per "
                        "object number inside the worker (r5).",
     "lm_score": "O(n) trigram build via zipped shifted arrays; model "
                 "shuffle-joined on tri, 1-row total broadcast.",
